@@ -332,11 +332,10 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
   }
 
   // the handshake line is control-plane, not the hot path: Jackson (shipped
-  // with Spark) parses it once per connection
+  // with Spark) parses it
   private def handshakeField(line: String, field: String): Option[String] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     try {
-      val node = om.readTree(line)
+      val node = ListenServer.handshakeMapper.readTree(line)
       // explicit JSON null == absent: clients whose serializers emit
       // optional fields as null ("resumeAfter":null) mean "no token", not
       // "a token you must refuse" — NullNode.asText() is the string
@@ -353,9 +352,8 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
     */
   private def handshakeObjectField(line: String,
                                    field: String): Option[Map[String, String]] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     try {
-      Option(om.readTree(line).get(field)).filter(_.isObject).map { n =>
+      Option(ListenServer.handshakeMapper.readTree(line).get(field)).filter(_.isObject).map { n =>
         import scala.jdk.CollectionConverters._
         n.properties().asScala.filter(!_.getValue.isNull)
           .map(e => e.getKey -> e.getValue.asText()).toMap
@@ -498,6 +496,10 @@ class ListenServer(port: Int = 0, queueCapacity: Int = 1024,
 }
 
 object ListenServer {
+  // shared: ObjectMapper is heavyweight and readTree is thread-safe — every
+  // connection (nproc ingest writers per micro-batch) parses a handshake
+  private val handshakeMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private[streaming] def isBase64Char(c: Char): Boolean =
     (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') ||
       (c >= '0' && c <= '9') || c == '+' || c == '/' || c == '='

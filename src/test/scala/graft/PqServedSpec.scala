@@ -21,10 +21,17 @@ class PqServedSpec extends SparkSuite {
   }
 
   test("serving plan reads the codes artifact and contains no encode") {
-    val name = Similarity.ensurePqCodes(spark, sf)
-    val plan = planOf(Similarity.pqTopKServed(spark, sf))
-    assert(plan.contains(name.split('.').last),
-      s"serving plan does not scan the persisted codes table:\n${plan.take(4000)}")
+    val short = Similarity.ensurePqCodes(spark, sf).split('.').last
+    val served = Similarity.pqTopKServed(spark, sf)
+    val plan = planOf(served)
+    // the scan's root paths, not the explain string: explain cuts locations
+    // at spark.sql.maxMetadataStringLength, so a long warehouse path hides
+    // the table directory
+    val roots = served.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten
+    assert(roots.exists(_.toUri.getPath.split('/').contains(short)),
+      s"serving plan does not scan the persisted codes table $short:\n${roots.mkString("\n")}")
     // the encode's surviving plan signature is the per-row ARGMIN over the
     // codeword ids — array_min over the candidate struct array since the
     // r16 argmin rewrite (the sequence(0, ksub-1) literal itself
